@@ -73,16 +73,17 @@ class EngineConfig:
     # conversation cannot pin a single task (north-rule skew requirement).
     assembly_buckets_per_core: int = 4
 
-    # assembly implementation: 'pandas' (salted applyInPandas slim-verdict —
-    # measured ~2x faster than the window form at single-node scale because
-    # windows drag wide rows through three sorts), 'sql' (pure JVM window
-    # functions — preferred at extreme scale where the verdict side outgrows
-    # the broadcast threshold and the join degrades to an extra full-feed
-    # shuffle the SQL path never pays), or 'auto' (default): pick per batch
+    # assembly implementation: 'pandas' (salted applyInPandas slim-verdict),
+    # 'sql' (pure JVM window functions — never pays the extra full-feed
+    # shuffle the pandas path's verdict join degrades to once the verdict
+    # side outgrows the broadcast threshold), or 'auto' (default): pick per batch
     # from the Catalyst size estimate of the slim verdict relation vs the
     # session's autoBroadcastJoinThreshold — pandas while the verdict join
     # stays a broadcast, sql once it would degrade to a full-feed shuffle.
-    # Callers may still override per call.
+    # Callers may still override per call. The SQL path was the faster one
+    # in every recorded bench round (cdc_assembly_sql vs _pandas, BENCH_r01-
+    # r05), and a 3-pair bulk_backfill A/B on 4 CPUs ran 'auto' and 'sql' at
+    # parity (batch_s_p50 4.62/4.69/4.64 s vs 4.07/4.91/5.14 s).
     assembly_mode: str = "auto"
 
     # start-position modes — the reference resolves a start position by scn /

@@ -682,6 +682,12 @@ class LakeTable:
         Old files written under earlier schemas are aligned: missing columns
         null-filled, widened columns upcast, renames bound through stable
         field ids (metadata-only evolution).
+
+        Merge-on-read snapshots resolve their equality deletes here: one
+        key-only scan per delete generation (files sharing schema and data
+        sequence number) and one anti-join dropping every row whose key a
+        delete with a strictly higher sequence number carries — broadcast
+        while the delete files fit ``mor.delete.broadcast-bytes``.
         """
         m = self.manifest(version)
         cur = StructType.fromJson(m["schema"])
@@ -737,46 +743,48 @@ class LakeTable:
 
         # merge-on-read resolve (Iceberg v2 equality deletes): a data row
         # survives iff no delete file with a STRICTLY HIGHER data sequence
-        # number carries its key. One aggregation over the (small) delete
-        # relation + one join — cost independent of how many MoR commits
-        # are stacked; both sides share the bucket spec, so at cluster
-        # scale the join is storage-partitioned (no exchange).
+        # number carries its key. One key-only scan per delete generation
+        # (files sharing schema_id and seq) + one anti-join — no aggregate
+        # exchange, no row fan-out, cost independent of how many MoR commits
+        # are stacked; both sides share the bucket spec, so at cluster scale
+        # the join is storage-partitioned (no exchange).
         key_cols = m["key_cols"]
-        by_gen: dict[tuple[int, int], list[str]] = {}
-        for f in data:
-            by_gen.setdefault((f["schema_id"], int(f.get("seq", 0))), []).append(
-                os.path.join(self.path, f["path"])
-            )
-        parts = []
-        for (sid, seq), paths in by_gen.items():
-            parts.append(
-                align(sid, paths).withColumn(_SEQ_COL, F.lit(seq))
-            )
+
+        def generations(entries) -> dict[tuple[int, int], list[str]]:
+            gens: dict[tuple[int, int], list[str]] = {}
+            for f in entries:
+                gens.setdefault(
+                    (f["schema_id"], int(f.get("seq", 0))), []
+                ).append(os.path.join(self.path, f["path"]))
+            return gens
+
+        parts = [
+            align(sid, paths).withColumn(_SEQ_COL, F.lit(seq))
+            for (sid, seq), paths in generations(data).items()
+        ]
         rows = parts[0]
         for p in parts[1:]:
             rows = rows.unionByName(p)
 
         key_types = {f.name: f.dataType for f in cur.fields}
         dparts = []
-        for f in dels:
-            st = StructType.fromJson(m["schemas"][str(f["schema_id"])])
+        for (sid, seq), paths in generations(dels).items():
+            st = StructType.fromJson(m["schemas"][str(sid)])
             dkeys = spark.read.schema(
                 StructType([fl for fl in st.fields if fl.name in key_cols])
-            ).parquet(os.path.join(self.path, f["path"]))
+            ).parquet(*paths)
             dparts.append(dkeys.select(
                 *[F.col(k).cast(key_types[k]).alias(k) for k in key_cols],
-                F.lit(int(f["seq"])).alias("_dseq"),
+                F.lit(seq).alias("_dseq"),
             ))
         dd = dparts[0]
         for p in dparts[1:]:
             dd = dd.unionByName(p)
-        dagg = dd.groupBy(*key_cols).agg(F.max("_dseq").alias("_dseq"))
         # manifest FILE-SIZE stats decide the join strategy up front
         # (round 4 — the old form hard-coded a 2M-ROW cutoff, blind to key
         # width): broadcast while the delete relation's on-disk bytes fit
         # the table's `mor.delete.broadcast-bytes` budget (default 64 MiB
-        # — parquet bytes of key-only files, an upper bound on the
-        # post-agg relation), else fall back to the shuffled join and let
+        # of key-only parquet), else fall back to the shuffled join and let
         # AQE plan it. Entries from pre-round-4 manifests lack `bytes`;
         # estimate those at 32 B/row.
         limit = int(self.prop(_MOR_BCAST_PROP, 64 * 1024 * 1024))
@@ -784,17 +792,14 @@ class LakeTable:
             int(f.get("bytes") or int(f["rows"]) * 32) for f in dels
         )
         if del_bytes <= limit:
-            dagg = F.broadcast(dagg)
+            dd = F.broadcast(dd)
         # eqNullSafe key match — the same null semantics the CoW merge
         # resolve uses, so a null-keyed row cannot dodge its delete
-        r, d = rows.alias("r"), dagg.alias("d")
+        r, d = rows.alias("r"), dd.alias("d")
         cond = [F.col(f"r.{k}").eqNullSafe(F.col(f"d.{k}")) for k in key_cols]
-        out = (
-            r.join(d, cond, "left")
-            .where(F.col("d._dseq").isNull()
-                   | (F.col(f"r.{_SEQ_COL}") >= F.col("d._dseq")))
-        )
-        return out.select(*[F.col(f"r.{f.name}") for f in cur.fields])
+        cond.append(F.col("d._dseq") > F.col(f"r.{_SEQ_COL}"))
+        out = r.join(d, cond, "left_anti")
+        return out.select(*[f.name for f in cur.fields])
 
     # ---------------------------------------------------------------- writing
 
@@ -1304,7 +1309,8 @@ class LakeTable:
 
         Candidates default to buckets carrying any delete file or more than
         one data file. Run it on a cadence (streaming: ``compact_every``)
-        so the read-side resolve stays one small broadcast join.
+        so the read-side resolve stays a few small delete scans and one
+        broadcast anti-join (see ``read``).
         """
         m = self.manifest()
         per_bucket_files: dict[int, int] = {}

@@ -53,10 +53,13 @@ def apply_sig_index_batch(
     batch_id: int,
     bits: int = 32,
     use_portable_hash: bool = True,
+    touched_buckets: list[int] | None = None,
 ) -> dict:
     """Re-sign the touched conversations from the post-rollup view and
     MERGE into the signature index (delete when the conversation is gone).
-    Call AFTER apply_conv_rollup_batch of the same batch."""
+    Call AFTER apply_conv_rollup_batch of the same batch.
+    ``touched_buckets`` (optional): the index's buckets of the touched
+    conv_ids, forwarded to ``merge`` (see apply_conv_rollup_batch)."""
     touched = touched_convs.select("conv_id").where(
         F.col("conv_id").isNotNull()
     ).distinct()
@@ -73,7 +76,8 @@ def apply_sig_index_batch(
         .otherwise(F.lit("U")).alias("op"),
         F.array(F.lit("simhash")).alias("cols_set"),
     )
-    return index.merge(spark, upd, batch_id=batch_id)
+    return index.merge(
+        spark, upd, batch_id=batch_id, touched=touched_buckets)
 
 
 def neardup_candidates(

@@ -64,12 +64,16 @@ def apply_conv_rollup_batch(
     cfg: EngineConfig,
     batch_id: int,
     sep: str = "\x1f",
+    touched_buckets: list[int] | None = None,
 ) -> dict:
     """Re-roll the touched conversations from the primary's current state
     and MERGE into the conversations table (see module doc).
 
     ``touched_convs``: one column ``conv_id`` — the conversations this
     batch's net changes touched (any DML, including deletes).
+    ``touched_buckets`` (optional): the conversations table's buckets of
+    those conv_ids, forwarded to ``merge`` so it skips its own
+    distinct-collect over the rollup plan.
     """
     touched = touched_convs.select("conv_id").where(
         F.col("conv_id").isNotNull()
@@ -85,4 +89,5 @@ def apply_conv_rollup_batch(
         .otherwise(F.lit("U")).alias("op"),
         F.array(*[F.lit(c) for c in _PAYLOAD]).alias("cols_set"),
     )
-    return conversations.merge(spark, upd, batch_id=batch_id)
+    return conversations.merge(
+        spark, upd, batch_id=batch_id, touched=touched_buckets)

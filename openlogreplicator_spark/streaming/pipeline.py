@@ -292,11 +292,26 @@ class CDCStreamPipeline:
                 apply_conv_rollup_batch,
             )
 
+            sig = self.sig_index_tables.get(tname)
+            # both tables key on conv_id, and each merge's updates hold
+            # exactly this batch's non-null conv_ids, so these bucket lists
+            # cover (touched ⊇ buckets of `upd`) each merge — collected for
+            # both tables in ONE job, instead of a distinct-collect per
+            # merge that runs the whole rollup / signature plan once more
+            # before its write runs it again
+            side = [conv] if sig is None else [conv, sig]
+            hit = (
+                committed.select("conv_id")
+                .where(F.col("conv_id").isNotNull())
+                .select(*[t.bucket_expr().alias(f"_b{i}")
+                          for i, t in enumerate(side)])
+                .distinct().collect()
+            )
+            touched = [sorted({r[i] for r in hit}) for i in range(len(side))]
             summaries.append(apply_conv_rollup_batch(
                 spark, committed.select("conv_id"), table, conv, self.cfg,
-                batch_id,
+                batch_id, touched_buckets=touched[0],
             ))
-            sig = self.sig_index_tables.get(tname)
             if sig is not None:
                 from openlogreplicator_spark.plans.dedup_index import (
                     apply_sig_index_batch,
@@ -305,7 +320,7 @@ class CDCStreamPipeline:
                 # after the rollup: signatures read the post-rollup view
                 summaries.append(apply_sig_index_batch(
                     spark, committed.select("conv_id"), conv, sig, self.cfg,
-                    batch_id,
+                    batch_id, touched_buckets=touched[1],
                 ))
         if hist is not None:
             from openlogreplicator_spark.plans.scd2_apply import (
@@ -608,7 +623,7 @@ class CDCStreamPipeline:
                 s["trigger_batch"] = int(batch_id)
                 summaries.append(s)
 
-        self._write_lineage(spark, batch_id, part_stats, summaries,
+        self._write_lineage(batch_id, part_stats, summaries,
                             wall_ms=int((time.time() - t0) * 1000))
         if ctl_seen:
             # flag only AFTER the batch fully applied: the poller in
@@ -617,7 +632,16 @@ class CDCStreamPipeline:
             self.shutdown_requested = True
         return summaries
 
-    def _write_lineage(self, spark, batch_id, part_stats, summaries, wall_ms):
+    def _write_lineage(self, batch_id, part_stats, summaries, wall_ms):
+        """Append this batch's lineage rows (one per source partition) as
+        one parquet file written from the driver — no Spark job. The file
+        lands under a dot-prefixed name (which Spark's reader skips) and is
+        renamed into place, so a reader never sees a partial file."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         snap = max(
             (s.get("snapshot_id", -1) for s in summaries if not s.get("skipped")),
             default=-1,
@@ -632,15 +656,19 @@ class CDCStreamPipeline:
              int(p["ts_max_us"]) if p["ts_max_us"] is not None else -1)
             for p in part_stats
         ] or [(int(batch_id), -1, -1, -1, 0, int(snap), 0, int(wall_ms), -1)]
-        df = spark.createDataFrame(
-            rows,
-            "batch_id long, partition_id int, scn_min long, scn_max long,"
-            "events long, snapshot_id long, rows_merged long, wall_ms long,"
-            "ts_max_us long",
-        )
+        schema = pa.schema([
+            (c, pa.int32() if c == "partition_id" else pa.int64())
+            for c in LINEAGE_COLS
+        ])
+        tbl = pa.Table.from_pylist(
+            [dict(zip(LINEAGE_COLS, r)) for r in rows], schema=schema)
         # append-only; a replayed batch appends again -> readers dedup on
         # (batch_id, partition_id) keeping the latest write (see read_lineage)
-        df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}-c000.parquet"
+        tmp = os.path.join(self.lineage_dir, "." + name)
+        pq.write_table(tbl, tmp)
+        os.replace(tmp, os.path.join(self.lineage_dir, name))
 
     def read_lineage(self, spark) -> DataFrame:
         if not os.path.exists(self.lineage_dir):

@@ -247,10 +247,12 @@ def main() -> None:
     replay_batch(spark, tagged.drop("_t"), mor_tbl, cfg_mor, batch_id=1)
     sections.append((
         "merge-on-read resolve read — stacked data generations unioned "
-        "(each tagged with its data sequence number); delete keys "
-        "aggregated to max-seq and BROADCAST into one left join + filter, "
-        "so resolve cost is independent of how many MoR commits are "
-        "stacked; compaction returns the plan to a bare scan",
+        "(each tagged with its data sequence number); ONE key-only scan "
+        "per delete generation, BROADCAST into one left-anti join on the "
+        "null-safe key + strictly-higher delete seq (no aggregate, no "
+        "shuffle); the seq literals fold per data generation, so the "
+        "newest generation, which no delete outranks, is a bare scan, "
+        "and compaction returns the whole plan to one",
         explain(mor_tbl.read(spark)),
     ))
 
